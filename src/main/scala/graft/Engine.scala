@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Session + testdata helpers shared by Verify / Bench / tests.
   *
@@ -73,6 +75,46 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session a query runs its opt-in optimizer-rule legs on: a clone of
+    * `parent` (its CURRENT runtime conf, unlike `newSession()`) with `rule`
+    * appended to `experimental.extraOptimizations` and `flags` set — both
+    * once, at creation; the session is never mutated afterwards, and the
+    * parent never at all. Concurrent rule queries therefore share no
+    * mutable state, and a lazy frame keeps its rule for as long as it
+    * lives. Every frame a leg runs must belong to the returned session
+    * (read tables through it; cached index handles re-root onto it), or
+    * the rule never sees the plan.
+    *
+    * `extraOptimizations` runs in the optimizer's last batch ("User
+    * Provided Optimizers"), after window-group-limit inference — the batch
+    * every rule test and declared query exercises, and the one
+    * KnnJoinAuto's window match depends on. `graft.GraftExtensions`
+    * injects the same rules into the operator-optimization batches
+    * instead; no test covers that route.
+    *
+    * Cached per (parent, rule class `R`, flag set), so `Tables` handles
+    * stay warm across reps; sessions of a stopped SparkContext
+    * are dropped, like [[Tables]]' handles. A flag set is a snapshot:
+    * parent conf changed after the first call does not reach the clone.
+    */
+  def ruleSession[R <: Rule[LogicalPlan]](
+      parent: SparkSession,
+      rule: SparkSession => R,
+      flags: (String, String)*,
+  )(implicit tag: scala.reflect.ClassTag[R]): SparkSession = ruleSessions.synchronized {
+    ruleSessions.filterInPlace { case ((p, _, _), _) => !p.sparkContext.isStopped }
+    ruleSessions.getOrElseUpdate((parent, tag.runtimeClass.getName, flags.toMap), {
+      val s = GraftBridge.cloneSession(parent)
+      flags.foreach { case (k, v) => s.conf.set(k, v) }
+      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      classic.experimental.extraOptimizations = classic.experimental.extraOptimizations :+ rule(s)
+      s
+    })
+  }
+
+  private val ruleSessions =
+    scala.collection.mutable.HashMap.empty[(SparkSession, String, Map[String, String]), SparkSession]
 }
 
 /** Lazy loaders for the driver testdata tables (TESTDATA.md).

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Writes PLANS.md — the committed physical-plan audit for a
   * representative slice of the declared queries, so plan-shape claims
@@ -11,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * companion.
   *
   * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  *
+  * Runs on [[Engine.session]], whose shuffle partition count follows
+  * `SPARK_GRAFT_CPUS`; the committed PLANS.md was generated with
+  * `SPARK_GRAFT_CPUS=4`.
   */
 object PlanDump {
 
@@ -43,17 +48,24 @@ object PlanDump {
     "v53_hydrated_knn_auto" -> "round 16 (declarative HYDRATED filtered batch ANN — the window over queries × (store ⋈ metadata) with the predicate on the METADATA table): KnnJoinAuto recognizes the single equi-keyed hydration join and substitutes the gated Ivf.knnJoin with the column-pruned metadata leaf as the payload carrier — NO Window and NO hydration join riding the scored path; the metadata predicate reaches the METADATA scan as PushedFilters (never the store scan — the store has no such column), the allowed-id set semi-joins the candidates, and the store scan stays list_id-pruned at the gate's widened width",
   )
 
+  /** `emb` written as an 8-list IVF store, and (emb, store) re-read on
+    * the KnnJoinAuto session at probe width 2 — the rule-rewritten legs of
+    * the v50/v52/v53 audits.
+    */
+  private def ivfLeg(spark: SparkSession, emb: DataFrame, tag: String): (DataFrame, DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString + "/store"
+    val (assigned, model) = graft.operators.Ivf.assign(emb, "embedding", 8)
+    graft.operators.Ivf.writeIndexed(assigned, dir, model, "embedding")
+    val rs = Engine.ruleSession(spark, graft.plans.KnnJoinAuto(_),
+      "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> "2")
+    (GraftBridge.reRoot(rs, emb), rs.read.parquet(dir))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out   = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-plandump")
+    lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit of representative queries\n\n"
     sb ++= s"Generated by `runMain graft.PlanDump` against `$sfDir`.\n"
@@ -74,115 +86,32 @@ object PlanDump {
         } else if (name == "v47_pq_auto_probe") {
           // the declared query returns COLLECTED parity rows (LocalRelation
           // plan) — audit the declarative query the rule rewrites instead
-          import org.apache.spark.sql.functions.col
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-            .select(col("vec_id"), col("embedding"))
           val dir = java.nio.file.Files.createTempDirectory("plandump-v47").toString + "/store"
-          graft.operators.Pq.writeStore(emb, "embedding", "vec_id", dir, nList = 8, m = 16, ksub = 64)
-          val (_, floats, _, _) = graft.operators.Pq.readStore(spark, dir)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(spark)
-          spark.conf.set("spark.graft.pq.autoProbe", "true")
-          release = () => {
-            spark.conf.unset("spark.graft.pq.autoProbe")
-            classic.experimental.extraOptimizations = prev
-          }
+          graft.operators.Pq.writeStore(emb.select(col("vec_id"), col("embedding")),
+            "embedding", "vec_id", dir, nList = 8, m = 16, ksub = 64)
+          val rs = Engine.ruleSession(spark, graft.plans.PqAutoProbe(_), "spark.graft.pq.autoProbe" -> "true")
+          val (_, floats, _, _) = graft.operators.Pq.readStore(rs, dir)
           val q = graft.operators.Embedder.default.embed("plan audit probe").map(_.toDouble).toSeq
           graft.operators.Search.topK(floats, "embedding", "vec_id", q, 10)
             .select("vec_id", "score")
         } else if (name == "v50_knn_join_auto") {
           // same device as v47: the declared query returns collected parity
           // rows — audit the declarative batch window the rule rewrites
-          import org.apache.spark.sql.functions._
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-            .select(col("vec_id"), col("embedding"))
-          val dir = java.nio.file.Files.createTempDirectory("plandump-v50").toString + "/store"
-          val (assigned, model) = graft.operators.Ivf.assign(emb, "embedding", 8)
-          graft.operators.Ivf.writeIndexed(assigned, dir, model, "embedding")
-          val indexed = spark.read.parquet(dir)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", "2")
-          release = () => {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
-          val qs = emb.where(col("vec_id") < 8)
-            .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          qs.crossJoin(indexed)
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select("qid", "vec_id", "score", "rank")
+          val (e, indexed) = ivfLeg(spark, emb.select(col("vec_id"), col("embedding")), "plandump-v50")
+          SparkEntry.knnWindow(SparkEntry.batchQueries(e).crossJoin(indexed), 5)
         } else if (name == "v52_per_query_knn_auto") {
           // v50's device with a label-carrying store and a conditioned join
-          import org.apache.spark.sql.functions._
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-            .select(col("vec_id"), col("embedding"), col("label"))
-          val dir = java.nio.file.Files.createTempDirectory("plandump-v52").toString + "/store"
-          val (assigned, model) = graft.operators.Ivf.assign(emb, "embedding", 8)
-          graft.operators.Ivf.writeIndexed(assigned, dir, model, "embedding")
-          val indexed = spark.read.parquet(dir)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", "2")
-          release = () => {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
-          val qs = emb.where(col("vec_id") < 8)
-            .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-              (col("vec_id") % 5).cast("int").as("want"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          qs.join(indexed, col("label") === col("want"))
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select("qid", "vec_id", "score", "rank")
+          val (e, indexed) = ivfLeg(spark, emb.select(col("vec_id"), col("embedding"), col("label")),
+            "plandump-v52")
+          SparkEntry.knnWindow(SparkEntry.batchQueries(e, want = true)
+            .join(indexed, col("label") === col("want")), 5)
         } else if (name == "v53_hydrated_knn_auto") {
           // v50's device with a separate metadata scan hydrating the store
-          import org.apache.spark.sql.functions._
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-            .select(col("vec_id"), col("embedding"))
-          val meta = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          val (e, indexed) = ivfLeg(spark, emb.select(col("vec_id"), col("embedding")), "plandump-v53")
+          val meta = e.sparkSession.read.parquet(s"$sfDir/embeddings.parquet")
             .select(col("vec_id").as("mid"), col("label").as("grade"))
-          val dir = java.nio.file.Files.createTempDirectory("plandump-v53").toString + "/store"
-          val (assigned, model) = graft.operators.Ivf.assign(emb, "embedding", 8)
-          graft.operators.Ivf.writeIndexed(assigned, dir, model, "embedding")
-          val indexed = spark.read.parquet(dir)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", "2")
-          release = () => {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
-          val qs = emb.where(col("vec_id") < 8)
-            .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          qs.crossJoin(indexed.join(meta, col("vec_id") === col("mid"))
-              .where(col("grade") >= 5))
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select("qid", "vec_id", "score", "rank")
+          SparkEntry.knnWindow(SparkEntry.batchQueries(e).crossJoin(indexed.join(meta, col("vec_id") === col("mid"))
+            .where(col("grade") >= 5)), 5)
         } else SparkEntry.queries(name)(spark, sfDir)
       // release in a finally: an explain failure must not leave the
       // chain's edge/node caches pinned for the rest of the dump

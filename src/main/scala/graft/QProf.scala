@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc query profiler: runs each named query twice (cold incl. codegen /
   * warm) and prints timings; with "-e" also prints the formatted plan.
@@ -10,16 +9,7 @@ object QProf {
     val sfDir   = args.head
     val explain = args.contains("-e")
     val names   = args.tail.filterNot(_ == "-e")
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark   = Engine.session("graft-qprof")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (explain) fn(spark, sfDir).explain("formatted")

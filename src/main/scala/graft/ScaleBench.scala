@@ -3,7 +3,7 @@ package graft
 import graft.operators._
 import graft.streaming.{EventWindows, Sessions}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Scaling-curve harness: generates seeded synthetic corpora at 1×/4×/16×
   * of the sf0.1 sizes (documents / embeddings / events) under /tmp, then
@@ -194,6 +194,11 @@ object ScaleBench {
       val qVec   = qvCache.computeIfAbsent(scale,
         _ => vecs.where(col("vec_id") === 7).select("embedding").head.getSeq[Double](0))
       def index() = Ivf.indexFor(vecs, "embedding", nList, cacheKey = s"scale768-$scale")
+      // the declarative ops' rule sessions (Engine.ruleSession) at this probe width
+      lazy val ivfRule = Engine.ruleSession(spark, graft.plans.IvfAutoProbe(_),
+        "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> nProbe.toString)
+      lazy val joinRule = Engine.ruleSession(spark, graft.plans.KnnJoinAuto(_),
+        "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> nProbe.toString)
       val exactIds = Search.topK(vecs, "embedding", "vec_id", qVec, 10)
         .select("vec_id").as[Long].collect().toSet
       // filtered-search fixtures: a synthetic payload (vec_id mod 100 as
@@ -229,20 +234,10 @@ object ScaleBench {
         }),
         "pq_auto_probe_768" -> (() => {
           val (_, floats, _, _) = pqStore(scale, vecs, nList)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(spark)
-          spark.conf.set("spark.graft.pq.autoProbe", "true")
-          spark.conf.set("spark.graft.pq.nProbe", nProbe.toString)
-          spark.conf.set("spark.graft.pq.refine", "32")
-          try Search.topK(floats, "embedding", "vec_id", qVec, 10)
+          val rs = Engine.ruleSession(spark, graft.plans.PqAutoProbe(_), "spark.graft.pq.autoProbe" -> "true",
+            "spark.graft.pq.nProbe" -> nProbe.toString, "spark.graft.pq.refine" -> "32")
+          Search.topK(GraftBridge.reRoot(rs, floats), "embedding", "vec_id", qVec, 10)
             .select("vec_id").as[Long].collect().count(exactIds).toLong
-          finally {
-            spark.conf.unset("spark.graft.pq.autoProbe")
-            spark.conf.unset("spark.graft.pq.nProbe")
-            spark.conf.unset("spark.graft.pq.refine")
-            classic.experimental.extraOptimizations = prev
-          }
         }),
         "knn_join_32q_768" -> (() => Search.knnJoin(vecs.where(col("vec_id") < 32), vecs,
           "embedding", "vec_id", "embedding", "vec_id", 10).count()),
@@ -270,19 +265,8 @@ object ScaleBench {
         // IvfAutoProbe into the pruned probe — same recall gate
         "auto_probe_768"   -> (() => {
           val (indexed, _) = index()
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", nProbe.toString)
-          try
-            Search.topK(indexed, "embedding", "vec_id", qVec, 10)
-              .select("vec_id").as[Long].collect().count(exactIds).toLong
-          finally {
-            classic.experimental.extraOptimizations = prev
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-          }
+          Search.topK(GraftBridge.reRoot(ivfRule, indexed), "embedding", "vec_id", qVec, 10)
+            .select("vec_id").as[Long].collect().count(exactIds).toLong
         }),
         // round-9 p9 at the REAL shape: one recrawl maintenance round
         // against a 768-d store with nList≈√n (the store builds once per
@@ -397,19 +381,9 @@ object ScaleBench {
         }),
         "ivf_auto_filt50_768" -> (() => {
           val (indexed, _) = index()
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", nProbe.toString)
-          try Search.topK(indexed, "embedding", "vec_id", qVec, 10,
+          Search.topK(GraftBridge.reRoot(ivfRule, indexed), "embedding", "vec_id", qVec, 10,
             Seq(pmod(col("vec_id"), lit(100)) < 50))
             .select("vec_id").as[Long].collect().count(filtExact(50)).toLong
-          finally {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
         }),
         // round 16: the HYDRATED declarative filtered probe — the same
         // sel-50% predicate but living in a JOINED metadata table, gated
@@ -421,38 +395,20 @@ object ScaleBench {
         // join riding the pruned scan.
         "ivf_hyd_filt50_768" -> (() => {
           val (indexed, _) = index()
-          val meta = vecs.select(col("vec_id").as("mid"),
+          val meta = GraftBridge.reRoot(ivfRule, vecs).select(col("vec_id").as("mid"),
             pmod(col("vec_id"), lit(100)).as("pct"))
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", nProbe.toString)
-          try Search.topK(indexed.join(meta, col("vec_id") === col("mid")),
+          Search.topK(GraftBridge.reRoot(ivfRule, indexed).join(meta, col("vec_id") === col("mid")),
             "embedding", "vec_id", qVec, 10, Seq(col("pct") < 50))
             .select("vec_id").as[Long].collect().count(filtExact(50)).toLong
-          finally {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
         }),
         "hnsw_auto_filt50_768" -> (() => {
-          val idx = Hnsw.indexFor(vecs, "embedding", "vec_id",
+          val rs = Engine.ruleSession(spark, graft.plans.HnswAutoProbe(_),
+            "spark.graft.hnsw.autoProbe" -> "true", "spark.graft.hnsw.efSearch" -> "64")
+          val idx = Hnsw.indexFor(GraftBridge.reRoot(rs, vecs), "embedding", "vec_id",
             cacheKey = s"scale768-hnsw-$scale", nShards = 4)
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.HnswAutoProbe(spark)
-          spark.conf.set("spark.graft.hnsw.autoProbe", "true")
-          spark.conf.set("spark.graft.hnsw.efSearch", "64")
-          try Search.topK(idx, "vec", "id", qVec, 10,
+          Search.topK(idx, "vec", "id", qVec, 10,
             Seq(pmod(col("id"), lit(100)) < 50))
             .select("id").as[Long].collect().count(filtExact(50)).toLong
-          finally {
-            spark.conf.unset("spark.graft.hnsw.autoProbe")
-            spark.conf.unset("spark.graft.hnsw.efSearch")
-            classic.experimental.extraOptimizations = prev
-          }
         }),
         "hnsw_filt50_768" -> (() => {
           val idx = Hnsw.indexFor(vecs, "embedding", "vec_id",
@@ -628,27 +584,9 @@ object ScaleBench {
         // sidecar read). Without the rule this query is a |q|·n cartesian.
         "knn_join_auto_768" -> (() => {
           val (indexed, _) = index()
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", nProbe.toString)
-          try {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-            vecs.where(col("vec_id") < 64)
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-              .crossJoin(indexed)
-              .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-                col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-              .withColumn("rank", row_number().over(w))
-              .where(col("rank") <= 10)
-              .select("qid", "vec_id", "score", "rank").count()
-          } finally {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
+          SparkEntry.knnWindow(GraftBridge.reRoot(joinRule, vecs).where(col("vec_id") < 64)
+            .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+            .crossJoin(GraftBridge.reRoot(joinRule, indexed)), 10).count()
         }),
         // round 16: the EXPLICIT twin of per_query_auto_768 — the same 8
         // equality classes (12.5% each; the gate widens every group's
@@ -680,31 +618,14 @@ object ScaleBench {
         // flat in queries — the rule itself adds only plan surgery.
         // rows = 640 (64 × top-10; every class holds ≥ 10 rows).
         "per_query_auto_768" -> (() => {
+          val qvecs = GraftBridge.reRoot(joinRule, vecs)
           val (indexed, _) = Ivf.indexFor(
-            vecs.withColumn("cls", pmod(col("vec_id"), lit(8)).cast("int")),
+            qvecs.withColumn("cls", pmod(col("vec_id"), lit(8)).cast("int")),
             "embedding", nList, cacheKey = s"scale768-cls-$scale")
-          val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          val prev    = classic.experimental.extraOptimizations
-          classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(spark)
-          spark.conf.set("spark.graft.ivf.autoProbe", "true")
-          spark.conf.set("spark.graft.ivf.nProbe", nProbe.toString)
-          try {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-            vecs.where(col("vec_id") < 64)
-              .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-                pmod(col("vec_id"), lit(8)).cast("int").as("want"))
-              .join(indexed, col("cls") === col("want"))
-              .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-                col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-              .withColumn("rank", row_number().over(w))
-              .where(col("rank") <= 10)
-              .select("qid", "vec_id", "score", "rank").count()
-          } finally {
-            spark.conf.unset("spark.graft.ivf.autoProbe")
-            spark.conf.unset("spark.graft.ivf.nProbe")
-            classic.experimental.extraOptimizations = prev
-          }
+          SparkEntry.knnWindow(qvecs.where(col("vec_id") < 64)
+            .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+              pmod(col("vec_id"), lit(8)).cast("int").as("want"))
+            .join(indexed, col("cls") === col("want")), 10).count()
         }),
       )
       val selected = if (onlyOps.isEmpty) ops else ops.filter(o => onlyOps.contains(o._1))

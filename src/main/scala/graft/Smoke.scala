@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Flagship smoke: runs SparkEntry.entry exactly as the driver does
   * (rows > 0 on sf0.001) and prints the result.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-smoke")
     val df = SparkEntry.entry(spark)
     df.show(10, 60)
     println(s"entry rows = ${df.count()}")

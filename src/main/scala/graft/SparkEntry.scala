@@ -5,7 +5,7 @@ import graft.functions.{TextOps, VectorOps}
 import graft.streaming.{EventWindows, HnswStream, PqStream}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the training-data-pipeline additions), each with a
@@ -63,18 +63,98 @@ object SparkEntry {
   private val storeCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Serializes the rule-toggling queries (v7/v41/v45/v46/v47/v50-v55):
-    * Verify runs the sweep on a 4-thread pool over ONE session, and both
-    * `experimental.extraOptimizations` and the `spark.graft.*` flags are
-    * session-global — two rule queries racing can clobber each other's
-    * registration mid-plan (caught in round 16: v51's finally-restore
-    * unregistered v50's rule between its legs in a two-query sweep, so
-    * the pruned leg silently planned the exact window and failed the
-    * rule≡call flag; the same channel existed for v7/v41/v45–v47 since
-    * they landed, it just never had two rule queries collide). Only
-    * these eleven serialize — the rest of the sweep stays parallel.
+  // ---- rule-query legs (v7/v41/v45–v47/v50–v55) ----
+  // Each leg runs on an Engine.ruleSession carrying its rule and flags;
+  // the caller's session is never touched, so these queries run in
+  // Verify's pool like any other.
+
+  /** One parity leg's rows, collected for comparison with its twin (Row
+    * equality treats a window's int rank and a join's long rank alike).
+    * Batch legs (query, id, score, rank) are sorted by (query, rank): a
+    * window's output is unordered.
     */
-  private val ruleLock = new Object
+  private def legRows(df: DataFrame): Seq[Row] = {
+    val rows = df.collect().toSeq
+    if (df.columns.length == 4) rows.sortBy(r => (r.getLong(0), r.getAs[Number](3).longValue))
+    else rows
+  }
+
+  private val TopKCols  = Seq("vec_id", "score")
+  private val BatchCols = Seq("query_id", "vec_id", "score", "rank")
+
+  /** A rule query's output: the exact leg's rows under path "exact" (score
+    * rounded to 4 places — the part DuckDB replays), then one row per
+    * parity flag carrying 1/0 in vec_id, a null score and -1 in any other
+    * column. Columns: path plus [[TopKCols]] or [[BatchCols]].
+    */
+  private def parityFrame(s: SparkSession, cols: Seq[String], exact: Seq[Row],
+      flags: (String, Boolean)*): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    val rows = exact.map(r => Row.fromSeq("exact" +: cols.indices.map[Any] { i =>
+        if (cols(i) == "score") math.rint(r.getDouble(i) * 1e4) / 1e4
+        else r.getAs[Number](i).longValue
+      })) ++
+      flags.map { case (path, ok) =>
+        Row.fromSeq(path +: cols.map {
+          case "vec_id" => if (ok) 1L else 0L
+          case "score"  => null
+          case _        => -1L
+        })
+      }
+    val schema = StructType(StructField("path", StringType) +:
+      cols.map(c => StructField(c, if (c == "score") DoubleType else LongType)))
+    val df = s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    if (cols == BatchCols) df.orderBy(col("path"), col("query_id"), col("rank"))
+    else df.orderBy(col("path"), desc("score"), col("vec_id"))
+  }
+
+  /** The declarative per-query top-k window KnnJoinAuto rewrites: score
+    * every (qid, qvec) × (vec_id, embedding) pair of `pairs` by cosine and
+    * keep each qid's top `k`, ranked by (score desc, vec_id).
+    */
+  private[graft] def knnWindow(pairs: DataFrame, k: Int): DataFrame =
+    pairs
+      .withColumn("score", graft.functions.VectorExpressions.cosineFast(
+        col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("score"), col("vec_id"))))
+      .where(col("rank") <= k)
+      .select(col("qid"), col("vec_id"), col("score"), col("rank"))
+
+  /** v50–v53's 8 batch queries (qid, qvec) from the embeddings table;
+    * `want` adds each query's own label class (qid % 5) for the per-query
+    * filtered legs.
+    */
+  private[graft] def batchQueries(emb: DataFrame, want: Boolean = false): DataFrame = {
+    val qs = emb.where(col("vec_id") < 8)
+    if (want) qs.select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+      (col("vec_id") % 5).cast("int").as("want"))
+    else qs.select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+  }
+
+  /** v50/v52/v53's tables and shared IVF store on the KnnJoinAuto session
+    * at probe width `nProbe`.
+    */
+  private def ivfJoinLeg(s: SparkSession, d: String, nProbe: Int): (Tables, DataFrame, Ivf.Model) = {
+    val t = Tables(Engine.ruleSession(s, graft.plans.KnnJoinAuto(_),
+      "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> nProbe.toString), d)
+    val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
+    (t, indexed, model)
+  }
+
+  /** v47/v54's PqAutoProbe session at (nProbe, refine). */
+  private def pqRule(s: SparkSession, nProbe: Int, refine: Int): SparkSession =
+    Engine.ruleSession(s, graft.plans.PqAutoProbe(_), "spark.graft.pq.autoProbe" -> "true",
+      "spark.graft.pq.nProbe" -> nProbe.toString, "spark.graft.pq.refine" -> refine.toString)
+
+  /** v47/v54's persistent PQ store root, bootstrapped once per JVM. */
+  private def pqStoreDir(s: SparkSession, d: String): String =
+    storeCache.computeIfAbsent(s"v47:$d", _ => {
+      val p   = java.nio.file.Files.createTempDirectory("graft-v47").toString + "/store"
+      val emb = Tables(s, d).embeddings.select(col("vec_id"), col("embedding"))
+      Pq.writeStore(emb, "embedding", "vec_id", p, nList = 8, m = 16, ksub = 64)
+      p
+    })
 
   /** Eight query vectors for the A/B significance test (v32) — a paired
     * sign-flip test needs enough topics for the permutation distribution
@@ -1219,8 +1299,7 @@ object SparkEntry {
     // V7 — the IvfAutoProbe optimizer rule end-to-end: a plain declarative
     // sort-by-cosine + limit over the IVF store, rewritten by the rule into
     // a pruned probe (plan shape asserted in IvfSpec; here the driver's gate
-    // checks the recall contract). Session mutations are scoped: results
-    // materialize inside the try, confs/rules reset in finally.
+    // checks the recall contract).
     // V9 — batch ANN: the k-NN JOIN against the IVF store (Ivf.knnJoin —
     // every query row fans out to its nProbe lists, candidates equi-join on
     // list_id, exact cosine + partial top-k). The gate is aggregate
@@ -1239,32 +1318,18 @@ object SparkEntry {
         .select(lit(100L).as("k_total"), (col("__found") >= 85).as("recall_ok"))
     }),
 
-    "v7_auto_probe" -> ((s, d) => ruleLock.synchronized {
+    "v7_auto_probe" -> ((s, d) => {
       import s.implicits._
-      val t = Tables(s, d)
+      val t = Tables(Engine.ruleSession(s, graft.plans.IvfAutoProbe(_),
+        "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> "6"), d)
       // dedicated cacheKey: sharing v6's would race two writeIndexed
       // overwrites to one path when the verify pool schedules both at once
       val (indexed, _) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v7")
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev      = classic.experimental.extraOptimizations
-      val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      s.conf.set("spark.graft.ivf.nProbe", "6")
-      try {
-        val ann = Search.topK(indexed, "embedding", "vec_id", qVec, 10)
-          .select("vec_id").as[Long].collect().toSet
-        val exact = Search.topK(t.embeddings, "embedding", "vec_id", qVec, 10)
-          .select("vec_id").as[Long].collect()
-        Seq((10L, exact.count(ann) >= 8)).toDF("k", "recall_ok")
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        prevProbe match {
-          case Some(v) => s.conf.set("spark.graft.ivf.nProbe", v)
-          case None    => s.conf.unset("spark.graft.ivf.nProbe")
-        }
-        classic.experimental.extraOptimizations = prev
-      }
+      val ann = Search.topK(indexed, "embedding", "vec_id", qVec, 10)
+        .select("vec_id").as[Long].collect().toSet
+      val exact = Search.topK(t.embeddings, "embedding", "vec_id", qVec, 10)
+        .select("vec_id").as[Long].collect()
+      Seq((10L, exact.count(ann) >= 8)).toDF("k", "recall_ok")
     }),
 
     // V55 — geometry-aware DECLARATIVE probe width (round 16): with
@@ -1277,42 +1342,24 @@ object SparkEntry {
     // gate (the gate widens the ADAPTIVE base by 1/sel); the exact leg
     // (margin 1e9 reaches every list → the rule declines and the user's
     // exact plan runs) is DuckDB-replayed as the brute-force top-10.
-    "v55_adaptive_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val t = Tables(s, d)
-      val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v7")
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev    = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      s.conf.set("spark.graft.ivf.adaptiveMargin", "0.15")
-      try {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val aSame = rows(Search.topK(indexed, "embedding", "vec_id", qVec, 10)
-          .select("vec_id", "score")) ==
-          rows(Ivf.searchAdaptive(indexed, model, "embedding", "vec_id", qVec, 10, 0.15)
-            .select("vec_id", "score"))
-        val fpred = col("label") >= 2
-        val fSame = rows(Search.topK(indexed, "embedding", "vec_id", qVec, 10, Seq(fpred))
-          .select("vec_id", "score")) ==
-          rows(Ivf.searchAdaptive(indexed, model, "embedding", "vec_id", qVec, 10, 0.15,
-            filters = Seq(fpred)).select("vec_id", "score"))
-        s.conf.set("spark.graft.ivf.adaptiveMargin", "1.0E9")
-        val exact = rows(Search.topK(indexed, "embedding", "vec_id", qVec, 10)
+    "v55_adaptive_auto" -> ((s, d) => {
+      def store(margin: String) = Ivf.indexFor(Tables(Engine.ruleSession(s, graft.plans.IvfAutoProbe(_),
+        "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.adaptiveMargin" -> margin), d).embeddings,
+        "embedding", 8, cacheKey = s"$d/embeddings#v7")
+      val (indexed, model) = store("0.15")
+      val aSame = legRows(Search.topK(indexed, "embedding", "vec_id", qVec, 10)
+        .select("vec_id", "score")) ==
+        legRows(Ivf.searchAdaptive(indexed, model, "embedding", "vec_id", qVec, 10, 0.15)
           .select("vec_id", "score"))
-        (exact.map { case (id, sc) => ("exact", id, math.rint(sc * 1e4) / 1e4) } ++
-          Seq(("rule_eq_adaptive", if (aSame) 1L else 0L, Double.NaN),
-            ("rule_eq_adaptive_filtered", if (fSame) 1L else 0L, Double.NaN)))
-          .toDF("path", "vec_id", "score")
-          .select(col("path"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"))
-          .orderBy(col("path"), desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        s.conf.unset("spark.graft.ivf.adaptiveMargin")
-        classic.experimental.extraOptimizations = prev
-      }
+      val fpred = col("label") >= 2
+      val fSame = legRows(Search.topK(indexed, "embedding", "vec_id", qVec, 10, Seq(fpred))
+        .select("vec_id", "score")) ==
+        legRows(Ivf.searchAdaptive(indexed, model, "embedding", "vec_id", qVec, 10, 0.15,
+          filters = Seq(fpred)).select("vec_id", "score"))
+      val exact = legRows(Search.topK(store("1.0E9")._1, "embedding", "vec_id", qVec, 10)
+        .select("vec_id", "score"))
+      parityFrame(s, TopKCols, exact,
+        "rule_eq_adaptive" -> aSame, "rule_eq_adaptive_filtered" -> fSame)
     }),
 
     // V56 — adaptive batch ANN (round 16): Ivf.knnJoinAdaptive gives the
@@ -4388,35 +4435,17 @@ object SparkEntry {
     // corpus) → the oracle is full VALUE parity vs the brute-force
     // top-10, and the rewritten values are checked row-for-row against
     // Hnsw.searchIndex in-query (the `matches_search_index` flag).
-    // Session mutations scoped exactly like v7: results materialize
-    // inside the try, confs/rules reset in finally.
-    "v41_hnsw_auto_probe" -> ((s, d) => ruleLock.synchronized {
+    "v41_hnsw_auto_probe" -> ((s, d) => {
       import s.implicits._
-      val emb = Tables(s, d).embeddings.select(col("vec_id"), col("embedding"))
+      val emb = Tables(Engine.ruleSession(s, graft.plans.HnswAutoProbe(_),
+        "spark.graft.hnsw.autoProbe" -> "true", "spark.graft.hnsw.efSearch" -> "65536"), d)
+        .embeddings.select(col("vec_id"), col("embedding"))
       val idx = Hnsw.indexFor(emb, "embedding", "vec_id", cacheKey = s"v41:$d", nShards = 4)
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev   = classic.experimental.extraOptimizations
-      val prevEf = s.conf.getOption("spark.graft.hnsw.efSearch")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.HnswAutoProbe(s)
-      s.conf.set("spark.graft.hnsw.autoProbe", "true")
-      s.conf.set("spark.graft.hnsw.efSearch", "65536")
-      try {
-        val viaRule = Search.topK(idx, "vec", "id", qVec, 10).select("id", "score")
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val viaApi = Hnsw.searchIndex(idx, qVec, "id", 10, efSearch = 65536)
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val same = viaRule == viaApi
-        viaRule.map { case (id, sc) => (id, math.rint(sc * 10000d) / 10000d, same) }
-          .toDF("vec_id", "score", "matches_search_index")
-          .orderBy(desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.hnsw.autoProbe")
-        prevEf match {
-          case Some(v) => s.conf.set("spark.graft.hnsw.efSearch", v)
-          case None    => s.conf.unset("spark.graft.hnsw.efSearch")
-        }
-        classic.experimental.extraOptimizations = prev
-      }
+      val viaRule = legRows(Search.topK(idx, "vec", "id", qVec, 10).select("id", "score"))
+      val same = viaRule == legRows(Hnsw.searchIndex(idx, qVec, "id", 10, efSearch = 65536))
+      viaRule.map(r => (r.getLong(0), math.rint(r.getDouble(1) * 10000d) / 10000d, same))
+        .toDF("vec_id", "score", "matches_search_index")
+        .orderBy(desc("score"), col("vec_id"))
     }),
 
     // V45 — DECLARATIVE filtered k-NN over the HNSW store (round 15, the
@@ -4430,45 +4459,30 @@ object SparkEntry {
     // lifted) rides the flag-aware beam OVERSAMPLED past the corpus
     // (efF = 131072), making the beam exhaustive — also exactly the
     // filtered brute force. The `rule_eq_call` flags pin the rewrite to
-    // the explicit searchIndex call row-for-row (v41's device). Session
-    // mutations scoped like v41: materialize in try, reset in finally.
-    "v45_hnsw_filtered_auto" -> ((s, d) => ruleLock.synchronized {
+    // the explicit searchIndex call row-for-row (v41's device).
+    "v45_hnsw_filtered_auto" -> ((s, d) => {
       import s.implicits._
-      val emb = Tables(s, d).embeddings.select(col("vec_id"), col("embedding"))
-      val idx = Hnsw.indexFor(emb, "embedding", "vec_id", cacheKey = s"v45:$d", nShards = 4)
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev   = classic.experimental.extraOptimizations
-      val prevEf = s.conf.getOption("spark.graft.hnsw.efSearch")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.HnswAutoProbe(s)
-      s.conf.set("spark.graft.hnsw.autoProbe", "true")
-      s.conf.set("spark.graft.hnsw.efSearch", "65536")
-      try {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        val epred  = col("id") % 7 === 0
-        val exRule = rows(Search.topK(idx, "vec", "id", qVec, 10, Seq(epred)).select("id", "score"))
-        val exApi  = rows(Hnsw.searchIndex(idx, qVec, "id", 10, efSearch = 65536,
-          filters = Seq(epred), payload = idx.select("id")))
-        val exSame = exRule == exApi
-        s.conf.set("spark.graft.hnsw.maxEf", "1000000000")
-        val bpred    = col("id") % 2 === 0
-        val beamRule = rows(Search.topK(idx, "vec", "id", qVec, 10, Seq(bpred)).select("id", "score"))
-        val beamApi  = rows(Hnsw.searchIndex(idx, qVec, "id", 10, efSearch = 65536,
-          filters = Seq(bpred), payload = idx.select("id"), maxEf = 1000000000))
-        val beamSame = beamRule == beamApi
-        (exRule.map { case (id, sc) => ("exact", id, math.rint(sc * 1e4) / 1e4, exSame) } ++
-          beamRule.map { case (id, sc) => ("beam", id, math.rint(sc * 1e4) / 1e4, beamSame) })
-          .toDF("path", "vec_id", "score", "rule_eq_call")
-          .orderBy(col("path"), desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.hnsw.autoProbe")
-        s.conf.unset("spark.graft.hnsw.maxEf")
-        prevEf match {
-          case Some(v) => s.conf.set("spark.graft.hnsw.efSearch", v)
-          case None    => s.conf.unset("spark.graft.hnsw.efSearch")
-        }
-        classic.experimental.extraOptimizations = prev
+      def store(flags: (String, String)*) = {
+        val rs = Engine.ruleSession(s, graft.plans.HnswAutoProbe(_), Seq(
+          "spark.graft.hnsw.autoProbe" -> "true", "spark.graft.hnsw.efSearch" -> "65536") ++ flags: _*)
+        Hnsw.indexFor(Tables(rs, d).embeddings.select(col("vec_id"), col("embedding")),
+          "embedding", "vec_id", cacheKey = s"v45:$d", nShards = 4)
       }
+      val idx    = store()
+      val epred  = col("id") % 7 === 0
+      val exRule = legRows(Search.topK(idx, "vec", "id", qVec, 10, Seq(epred)).select("id", "score"))
+      val exSame = exRule == legRows(Hnsw.searchIndex(idx, qVec, "id", 10, efSearch = 65536,
+        filters = Seq(epred), payload = idx.select("id")))
+      val wide     = store("spark.graft.hnsw.maxEf" -> "1000000000")
+      val bpred    = col("id") % 2 === 0
+      val beamRule = legRows(Search.topK(wide, "vec", "id", qVec, 10, Seq(bpred)).select("id", "score"))
+      val beamSame = beamRule == legRows(Hnsw.searchIndex(wide, qVec, "id", 10, efSearch = 65536,
+        filters = Seq(bpred), payload = wide.select("id"), maxEf = 1000000000))
+      def out(path: String, rows: Seq[Row], same: Boolean) =
+        rows.map(r => (path, r.getLong(0), math.rint(r.getDouble(1) * 1e4) / 1e4, same))
+      (out("exact", exRule, exSame) ++ out("beam", beamRule, beamSame))
+        .toDF("path", "vec_id", "score", "rule_eq_call")
+        .orderBy(col("path"), desc("score"), col("vec_id"))
     }),
 
     // V46 — DECLARATIVE filtered k-NN over the IVF store (round 15, the
@@ -4483,50 +4497,25 @@ object SparkEntry {
     // rule≡call flag: the rewrite and the explicit Ivf.search share the
     // estimate, the widened width, and the probe geometry, so their
     // results must match row-for-row.
-    "v46_ivf_filtered_auto" -> ((s, d) => ruleLock.synchronized {
+    "v46_ivf_filtered_auto" -> ((s, d) => {
       import s.implicits._
-      val t = Tables(s, d)
-      val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev      = classic.experimental.extraOptimizations
-      val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.IvfAutoProbe(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      try {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        s.conf.set("spark.graft.ivf.nProbe", "2")
-        val spred  = Seq(col("label") === 3, col("vec_id") % 7 === 0)
-        val exRule = rows(Search.topK(indexed, "embedding", "vec_id", qVec, 10, spred)
+      // the rule's rows at probe width nProbe, and whether they equal the explicit call's
+      def parity(nProbe: Int, preds: Seq[Column]): (Seq[Row], Boolean) = {
+        val (indexed, model) = Ivf.indexFor(Tables(Engine.ruleSession(s, graft.plans.IvfAutoProbe(_),
+          "spark.graft.ivf.autoProbe" -> "true", "spark.graft.ivf.nProbe" -> nProbe.toString), d)
+          .embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
+        val viaRule = legRows(Search.topK(indexed, "embedding", "vec_id", qVec, 10, preds)
           .select("vec_id", "score"))
-        val exApi = rows(Ivf.search(indexed, model, "embedding", "vec_id", qVec, 10, 2,
-          filters = spred).select("vec_id", "score"))
-        val exSame = exRule == exApi
-        s.conf.set("spark.graft.ivf.nProbe", "4")
-        val bpred = Seq(col("label") >= 2)
-        val bRule = rows(Search.topK(indexed, "embedding", "vec_id", qVec, 10, bpred)
-          .select("vec_id", "score"))
-        val bApi = rows(Ivf.search(indexed, model, "embedding", "vec_id", qVec, 10, 4,
-          filters = bpred).select("vec_id", "score"))
-        val bSame = bRule == bApi
-        val truth = Search.topK(t.embeddings.where(col("label") >= 2),
-          "embedding", "vec_id", qVec, 10).select("vec_id").as[Long].collect().toSet
-        val recall = bRule.map(_._1).count(truth)
-        (exRule.map { case (id, sc) => ("exact", id, math.rint(sc * 1e4) / 1e4) } :+
-          ("probe_recall_ge8", if (recall >= 8) 1L else 0L, Double.NaN) :+
-          ("rule_eq_call", if (exSame && bSame) 1L else 0L, Double.NaN))
-          .toDF("path", "vec_id", "score")
-          .select(col("path"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"))
-          .orderBy(col("path"), desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        prevProbe match {
-          case Some(v) => s.conf.set("spark.graft.ivf.nProbe", v)
-          case None    => s.conf.unset("spark.graft.ivf.nProbe")
-        }
-        classic.experimental.extraOptimizations = prev
+        (viaRule, viaRule == legRows(Ivf.search(indexed, model, "embedding", "vec_id", qVec, 10,
+          nProbe, filters = preds).select("vec_id", "score")))
       }
+      val (exRule, exSame) = parity(2, Seq(col("label") === 3, col("vec_id") % 7 === 0))
+      val (bRule, bSame)   = parity(4, Seq(col("label") >= 2))
+      val truth = Search.topK(Tables(s, d).embeddings.where(col("label") >= 2),
+        "embedding", "vec_id", qVec, 10).select("vec_id").as[Long].collect().toSet
+      val recall = bRule.map(_.getLong(0)).count(truth)
+      parityFrame(s, TopKCols, exRule,
+        "probe_recall_ge8" -> (recall >= 8), "rule_eq_call" -> (exSame && bSame))
     }),
 
     // V47 — PqAutoProbe end-to-end (round 15, the r14 verdict's #2): the
@@ -4540,47 +4529,19 @@ object SparkEntry {
     // bit-for-bit; the exhaustive probe (nProbe = nList, k·refine ≥
     // corpus) makes the ADC cut lossless, so its values are the
     // brute-force top-10 the DuckDB oracle replays. The store bootstraps
-    // once per JVM (pqStoreCache) — the measured operator is the probe,
+    // once per JVM (pqStoreDir) — the measured operator is the probe,
     // v44 prices the store lifecycle.
-    "v47_pq_auto_probe" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val dir = storeCache.computeIfAbsent(s"v47:$d", _ => {
-        val p   = java.nio.file.Files.createTempDirectory("graft-v47").toString + "/store"
-        val emb = Tables(s, d).embeddings.select(col("vec_id"), col("embedding"))
-        Pq.writeStore(emb, "embedding", "vec_id", p, nList = 8, m = 16, ksub = 64)
-        p
-      })
-      val (codes, floats, ivfm, pqm) = Pq.readStore(s, dir)
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(s)
-      s.conf.set("spark.graft.pq.autoProbe", "true")
-      try {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        s.conf.set("spark.graft.pq.nProbe", "2")
-        s.conf.set("spark.graft.pq.refine", "4")
-        val pRule = rows(Search.topK(floats, "embedding", "vec_id", qVec, 10)
-          .select("vec_id", "score"))
-        val pApi = rows(Pq.searchIvfPq(codes, floats, ivfm, pqm, "embedding", "vec_id",
-          qVec, 10, 2, 4).select("vec_id", "score"))
-        val pSame = pRule == pApi
-        s.conf.set("spark.graft.pq.nProbe", "8")
-        s.conf.set("spark.graft.pq.refine", "10000")
-        val exRule = rows(Search.topK(floats, "embedding", "vec_id", qVec, 10)
-          .select("vec_id", "score"))
-        (exRule.map { case (id, sc) => ("exact", id, math.rint(sc * 1e4) / 1e4) } :+
-          (("rule_eq_call", if (pSame) 1L else 0L, Double.NaN)))
-          .toDF("path", "vec_id", "score")
-          .select(col("path"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"))
-          .orderBy(col("path"), desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.pq.autoProbe")
-        s.conf.unset("spark.graft.pq.nProbe")
-        s.conf.unset("spark.graft.pq.refine")
-        classic.experimental.extraOptimizations = prev
-      }
+    "v47_pq_auto_probe" -> ((s, d) => {
+      val (codes, floats, ivfm, pqm) = Pq.readStore(s, pqStoreDir(s, d))
+      val p = pqRule(s, nProbe = 2, refine = 4)
+      val pFloats = GraftBridge.reRoot(p, floats)
+      val pSame = legRows(Search.topK(pFloats, "embedding", "vec_id", qVec, 10)
+        .select("vec_id", "score")) ==
+        legRows(Pq.searchIvfPq(GraftBridge.reRoot(p, codes), pFloats, ivfm, pqm, "embedding",
+          "vec_id", qVec, 10, 2, 4).select("vec_id", "score"))
+      val exRule = legRows(Search.topK(GraftBridge.reRoot(pqRule(s, nProbe = 8, refine = 10000), floats),
+        "embedding", "vec_id", qVec, 10).select("vec_id", "score"))
+      parityFrame(s, TopKCols, exRule, "rule_eq_call" -> pSame)
     }),
 
     // V50 — declarative BATCH ANN (round 16, the r15 verdict's #1): the
@@ -4597,66 +4558,26 @@ object SparkEntry {
     // per-batch cardinality gate and pins rule ≡ the explicit gated call.
     // rule_fired asserts the window actually left the plan (a silently
     // declined rewrite would still pass the value checks — v45's device).
-    "v50_knn_join_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val t = Tables(s, d)
-      val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
-      val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev      = classic.experimental.extraOptimizations
-      val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      try {
-        val qs = t.embeddings.where(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        def windowForm(preds: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          qs.crossJoin(preds.foldLeft(indexed)((df, p) => df.where(p)))
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select(col("qid"), col("vec_id"), col("score"), col("rank"))
-        }
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
-          df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.get(3) match { case i: Int => i.toLong; case l: Long => l }))
-            .sortBy(x => (x._1, x._4)).toSeq
-        def apiRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
-          rows(df.select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
-        s.conf.set("spark.graft.ivf.nProbe", "8")
-        val exPlan = windowForm(Nil)
-        val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
-        val exRule = rows(exPlan)
-        val exSame = exRule == apiRows(Ivf.knnJoin(indexed, model, qs, "qvec", "qid",
-          "embedding", "vec_id", 5, 8, excludeSelf = false))
-        s.conf.set("spark.graft.ivf.nProbe", "2")
-        val pSame = rows(windowForm(Nil)) == apiRows(Ivf.knnJoin(indexed, model, qs,
-          "qvec", "qid", "embedding", "vec_id", 5, 2, excludeSelf = false))
-        val fpred = col("label") >= 2
-        val fSame = rows(windowForm(Seq(fpred))) == apiRows(Ivf.knnJoin(indexed, model, qs,
-          "qvec", "qid", "embedding", "vec_id", 5, 2, excludeSelf = false,
-          filters = Seq(fpred), payload = indexed.select("vec_id", "label"),
-          payloadIdCol = "vec_id"))
-        (exRule.map { case (q, n, sc, r) => ("exact", q, n, math.rint(sc * 1e4) / 1e4, r) } ++
-          Seq(("rule_fired", -1L, if (fired) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_exact", -1L, if (exSame) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_pruned", -1L, if (pSame) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_filtered", -1L, if (fSame) 1L else 0L, Double.NaN, -1L)))
-          .toDF("path", "query_id", "vec_id", "score", "rank")
-          .select(col("path"), col("query_id"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"),
-            col("rank"))
-          .orderBy(col("path"), col("query_id"), col("rank"))
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        prevProbe match {
-          case Some(v) => s.conf.set("spark.graft.ivf.nProbe", v)
-          case None    => s.conf.unset("spark.graft.ivf.nProbe")
-        }
-        classic.experimental.extraOptimizations = prev
-      }
+    "v50_knn_join_auto" -> ((s, d) => {
+      def viaApi(df: DataFrame) =
+        legRows(df.select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
+      val (exT, ex, exModel) = ivfJoinLeg(s, d, nProbe = 8)
+      val exQs   = batchQueries(exT.embeddings)
+      val exPlan = knnWindow(exQs.crossJoin(ex), 5)
+      val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
+      val exRule = legRows(exPlan)
+      val exSame = exRule == viaApi(Ivf.knnJoin(ex, exModel, exQs, "qvec", "qid",
+        "embedding", "vec_id", 5, 8, excludeSelf = false))
+      val (t, indexed, model) = ivfJoinLeg(s, d, nProbe = 2)
+      val qs    = batchQueries(t.embeddings)
+      val pSame = legRows(knnWindow(qs.crossJoin(indexed), 5)) == viaApi(Ivf.knnJoin(indexed, model,
+        qs, "qvec", "qid", "embedding", "vec_id", 5, 2, excludeSelf = false))
+      val fpred = col("label") >= 2
+      val fSame = legRows(knnWindow(qs.crossJoin(indexed.where(fpred)), 5)) == viaApi(Ivf.knnJoin(
+        indexed, model, qs, "qvec", "qid", "embedding", "vec_id", 5, 2, excludeSelf = false,
+        filters = Seq(fpred), payload = indexed.select("vec_id", "label"), payloadIdCol = "vec_id"))
+      parityFrame(s, BatchCols, exRule, "rule_fired" -> fired, "rule_eq_call_exact" -> exSame,
+        "rule_eq_call_pruned" -> pSame, "rule_eq_call_filtered" -> fSame)
     }),
 
     // V51 — the EXACT brute fallback of the batch-ANN rule (round 16):
@@ -4670,46 +4591,18 @@ object SparkEntry {
     // DuckDB-replayed — no approximation legs, no recall gates.
     // rule_fired pins that the Window actually left the plan; rule_eq_call
     // pins the substituted values against the explicit Search.knnJoin.
-    "v51_brute_knn_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val t  = Tables(s, d)
-      val qs = t.embeddings.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus  = t.embeddings.select(col("vec_id"), col("embedding"))
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev    = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
-      s.conf.set("spark.graft.knnJoin.bruteAuto", "true")
-      try {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-        val auto = qs.crossJoin(corpus)
-          .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-            col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-          .withColumn("rank", row_number().over(w))
-          .where(col("rank") <= 5)
-          .select(col("qid"), col("vec_id"), col("score"), col("rank"))
-        val fired = !auto.queryExecution.optimizedPlan.toString.contains("Window")
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
-          df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.get(3) match { case i: Int => i.toLong; case l: Long => l }))
-            .sortBy(x => (x._1, x._4)).toSeq
-        val got = rows(auto)
-        val viaApi = rows(Search.knnJoin(qs, corpus, "qvec", "qid", "embedding", "vec_id",
-          5, excludeSelf = false)
-          .select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
-        (got.map { case (q, n, sc, r) => ("exact", q, n, math.rint(sc * 1e4) / 1e4, r) } ++
-          Seq(("rule_fired", -1L, if (fired) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call", -1L, if (got == viaApi) 1L else 0L, Double.NaN, -1L)))
-          .toDF("path", "query_id", "vec_id", "score", "rank")
-          .select(col("path"), col("query_id"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"),
-            col("rank"))
-          .orderBy(col("path"), col("query_id"), col("rank"))
-      } finally {
-        s.conf.unset("spark.graft.knnJoin.bruteAuto")
-        classic.experimental.extraOptimizations = prev
-      }
+    "v51_brute_knn_auto" -> ((s, d) => {
+      val t = Tables(Engine.ruleSession(s, graft.plans.KnnJoinAuto(_),
+        "spark.graft.knnJoin.bruteAuto" -> "true"), d)
+      val qs     = batchQueries(t.embeddings)
+      val corpus = t.embeddings.select(col("vec_id"), col("embedding"))
+      val auto   = knnWindow(qs.crossJoin(corpus), 5)
+      val fired  = !auto.queryExecution.optimizedPlan.toString.contains("Window")
+      val got    = legRows(auto)
+      val viaApi = legRows(Search.knnJoin(qs, corpus, "qvec", "qid", "embedding", "vec_id",
+        5, excludeSelf = false)
+        .select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
+      parityFrame(s, BatchCols, got, "rule_fired" -> fired, "rule_eq_call" -> (got == viaApi))
     }),
 
     // V52 — declarative PER-QUERY filtered batch ANN (round 16): the
@@ -4724,69 +4617,29 @@ object SparkEntry {
     // conditioned window; the pruned and mixed (per-query + static
     // store predicate) legs pin rule ≡ the explicit perQueryFiltered
     // composition. rule_fired asserts the Window actually left the plan.
-    "v52_per_query_knn_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val t = Tables(s, d)
-      val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
-      val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev      = classic.experimental.extraOptimizations
-      val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      try {
-        val qs = t.embeddings.where(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-            (col("vec_id") % 5).cast("int").as("want"))
-        def windowForm(preds: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          qs.join(preds.foldLeft(indexed)((df, p) => df.where(p)),
-              col("label") === col("want"))
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select(col("qid"), col("vec_id"), col("score"), col("rank"))
-        }
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
-          df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.get(3) match { case i: Int => i.toLong; case l: Long => l }))
-            .sortBy(x => (x._1, x._4)).toSeq
-        def explicitCall(extra: Seq[org.apache.spark.sql.Column], nProbe: Int) =
-          graft.operators.Search.perQueryFiltered(
-            qs.select(col("qid").as("__gqid"), col("qvec").as("__gqv"),
-              col("want").cast("string").as("band")),
-            "band",
-            (0 until 5).map(v => v.toString -> ((col("label") === lit(v)) +: extra)),
-            (q, f) => Ivf.knnJoin(indexed, model, q, "__gqv", "__gqid",
-              "embedding", "vec_id", 5, nProbe, excludeSelf = false, filters = f,
-              payload = indexed.select("vec_id", "label"), payloadIdCol = "vec_id"))
-            .select(col("query_id"), col("neighbor_id"), col("score"), col("rank"))
-        s.conf.set("spark.graft.ivf.nProbe", "8")
-        val exPlan = windowForm(Nil)
-        val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
-        val exRule = rows(exPlan)
-        s.conf.set("spark.graft.ivf.nProbe", "2")
-        val pSame = rows(windowForm(Nil)) == rows(explicitCall(Nil, 2))
-        val mpred = col("vec_id") % 3 === 0
-        val mSame = rows(windowForm(Seq(mpred))) == rows(explicitCall(Seq(mpred), 2))
-        (exRule.map { case (q, n, sc, r) => ("exact", q, n, math.rint(sc * 1e4) / 1e4, r) } ++
-          Seq(("rule_fired", -1L, if (fired) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_pruned", -1L, if (pSame) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_mixed", -1L, if (mSame) 1L else 0L, Double.NaN, -1L)))
-          .toDF("path", "query_id", "vec_id", "score", "rank")
-          .select(col("path"), col("query_id"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"),
-            col("rank"))
-          .orderBy(col("path"), col("query_id"), col("rank"))
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        prevProbe match {
-          case Some(v) => s.conf.set("spark.graft.ivf.nProbe", v)
-          case None    => s.conf.unset("spark.graft.ivf.nProbe")
-        }
-        classic.experimental.extraOptimizations = prev
-      }
+    "v52_per_query_knn_auto" -> ((s, d) => {
+      def windowForm(qs: DataFrame, store: DataFrame) =
+        knnWindow(qs.join(store, col("label") === col("want")), 5)
+      val (exT, ex, _) = ivfJoinLeg(s, d, nProbe = 8)
+      val exPlan = windowForm(batchQueries(exT.embeddings, want = true), ex)
+      val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
+      val exRule = legRows(exPlan)
+      val (t, indexed, model) = ivfJoinLeg(s, d, nProbe = 2)
+      val qs = batchQueries(t.embeddings, want = true)
+      def explicitCall(extra: Seq[Column]) = legRows(Search.perQueryFiltered(
+          qs.select(col("qid").as("__gqid"), col("qvec").as("__gqv"),
+            col("want").cast("string").as("band")),
+          "band",
+          (0 until 5).map(v => v.toString -> ((col("label") === lit(v)) +: extra)),
+          (q, f) => Ivf.knnJoin(indexed, model, q, "__gqv", "__gqid",
+            "embedding", "vec_id", 5, 2, excludeSelf = false, filters = f,
+            payload = indexed.select("vec_id", "label"), payloadIdCol = "vec_id"))
+        .select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
+      val pSame = legRows(windowForm(qs, indexed)) == explicitCall(Nil)
+      val mpred = col("vec_id") % 3 === 0
+      val mSame = legRows(windowForm(qs, indexed.where(mpred))) == explicitCall(Seq(mpred))
+      parityFrame(s, BatchCols, exRule, "rule_fired" -> fired,
+        "rule_eq_call_pruned" -> pSame, "rule_eq_call_mixed" -> mSame)
     }),
 
     // V53 — declarative HYDRATED filtered batch ANN (round 16): the
@@ -4801,77 +4654,36 @@ object SparkEntry {
     // The EXACT leg (exhaustive probe) is DuckDB-replayed through the
     // same hydrated window; the pruned and per-query legs pin rule ≡ the
     // explicit payload call / perQueryFiltered composition.
-    "v53_hydrated_knn_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val t = Tables(s, d)
-      val (indexed, model) = Ivf.indexFor(t.embeddings, "embedding", 8, cacheKey = s"$d/embeddings#v46")
+    "v53_hydrated_knn_auto" -> ((s, d) => {
       // metadata: its own scan of the table (distinct relation), unique key
-      val meta = t.embeddings.select(col("vec_id").as("mid"), col("label").as("grade"))
-      val classic   = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev      = classic.experimental.extraOptimizations
-      val prevProbe = s.conf.getOption("spark.graft.ivf.nProbe")
-      classic.experimental.extraOptimizations = prev :+ graft.plans.KnnJoinAuto(s)
-      s.conf.set("spark.graft.ivf.autoProbe", "true")
-      try {
-        val qs = t.embeddings.where(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-            (col("vec_id") % 5).cast("int").as("want"))
-        def windowOver(joined: org.apache.spark.sql.DataFrame,
-            cond: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          cond.map(c => qs.join(joined, c)).getOrElse(qs.crossJoin(joined))
-            .withColumn("score", graft.functions.VectorExpressions.cosineFast(
-              col("embedding").cast("array<double>"), col("qvec").cast("array<double>")))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 5)
-            .select(col("qid"), col("vec_id"), col("score"), col("rank"))
-        }
-        def hydForm(pred: org.apache.spark.sql.Column) =
-          windowOver(indexed.join(meta, col("vec_id") === col("mid")).where(pred), None)
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Long)] =
-          df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.get(3) match { case i: Int => i.toLong; case l: Long => l }))
-            .sortBy(x => (x._1, x._4)).toSeq
-        s.conf.set("spark.graft.ivf.nProbe", "8")
-        val exPlan = hydForm(col("grade") >= 5)
-        val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
-        val exRule = rows(exPlan)
-        s.conf.set("spark.graft.ivf.nProbe", "2")
-        val pSame = rows(hydForm(col("grade") >= 5)) ==
-          rows(Ivf.knnJoin(indexed, model, qs, "qvec", "qid", "embedding", "vec_id", 5, 2,
-            excludeSelf = false, filters = Seq(col("grade") >= 5),
-            payload = meta, payloadIdCol = "mid")
-            .select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
-        // per-query ON metadata: each query's own grade class
-        val qSame = rows(windowOver(indexed.join(meta, col("vec_id") === col("mid")),
-          Some(col("grade") === col("want")))) ==
-          rows(graft.operators.Search.perQueryFiltered(
-            qs.select(col("qid").as("__gqid"), col("qvec").as("__gqv"),
-              col("want").cast("string").as("band")),
-            "band",
-            (0 until 5).map(v => v.toString -> Seq(col("grade") === lit(v))),
-            (q, f) => Ivf.knnJoin(indexed, model, q, "__gqv", "__gqid",
-              "embedding", "vec_id", 5, 2, excludeSelf = false, filters = f,
-              payload = meta, payloadIdCol = "mid"))
-            .select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
-        (exRule.map { case (q, n, sc, r) => ("exact", q, n, math.rint(sc * 1e4) / 1e4, r) } ++
-          Seq(("rule_fired", -1L, if (fired) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_pruned", -1L, if (pSame) 1L else 0L, Double.NaN, -1L),
-            ("rule_eq_call_perquery", -1L, if (qSame) 1L else 0L, Double.NaN, -1L)))
-          .toDF("path", "query_id", "vec_id", "score", "rank")
-          .select(col("path"), col("query_id"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"),
-            col("rank"))
-          .orderBy(col("path"), col("query_id"), col("rank"))
-      } finally {
-        s.conf.unset("spark.graft.ivf.autoProbe")
-        prevProbe match {
-          case Some(v) => s.conf.set("spark.graft.ivf.nProbe", v)
-          case None    => s.conf.unset("spark.graft.ivf.nProbe")
-        }
-        classic.experimental.extraOptimizations = prev
-      }
+      def meta(t: Tables) = t.embeddings.select(col("vec_id").as("mid"), col("label").as("grade"))
+      def viaApi(df: DataFrame) =
+        legRows(df.select(col("query_id"), col("neighbor_id"), col("score"), col("rank")))
+      val grade = col("grade") >= 5
+      val (exT, ex, _) = ivfJoinLeg(s, d, nProbe = 8)
+      val exPlan = knnWindow(batchQueries(exT.embeddings, want = true)
+        .crossJoin(ex.join(meta(exT), col("vec_id") === col("mid")).where(grade)), 5)
+      val fired  = !exPlan.queryExecution.optimizedPlan.toString.contains("Window")
+      val exRule = legRows(exPlan)
+      val (t, indexed, model) = ivfJoinLeg(s, d, nProbe = 2)
+      val qs       = batchQueries(t.embeddings, want = true)
+      val m        = meta(t)
+      val hydrated = indexed.join(m, col("vec_id") === col("mid"))
+      val pSame = legRows(knnWindow(qs.crossJoin(hydrated.where(grade)), 5)) ==
+        viaApi(Ivf.knnJoin(indexed, model, qs, "qvec", "qid", "embedding", "vec_id", 5, 2,
+          excludeSelf = false, filters = Seq(grade), payload = m, payloadIdCol = "mid"))
+      // per-query ON metadata: each query's own grade class
+      val qSame = legRows(knnWindow(qs.join(hydrated, col("grade") === col("want")), 5)) ==
+        viaApi(Search.perQueryFiltered(
+          qs.select(col("qid").as("__gqid"), col("qvec").as("__gqv"),
+            col("want").cast("string").as("band")),
+          "band",
+          (0 until 5).map(v => v.toString -> Seq(col("grade") === lit(v))),
+          (q, f) => Ivf.knnJoin(indexed, model, q, "__gqv", "__gqid",
+            "embedding", "vec_id", 5, 2, excludeSelf = false, filters = f,
+            payload = m, payloadIdCol = "mid")))
+      parityFrame(s, BatchCols, exRule, "rule_fired" -> fired,
+        "rule_eq_call_pruned" -> pSame, "rule_eq_call_perquery" -> qSame)
     }),
 
     // V54 — declarative HYDRATED filtered top-k over the persistent PQ
@@ -4884,51 +4696,22 @@ object SparkEntry {
     // the gate's exact branch) is DuckDB-replayed as the filtered brute
     // force; the pruned leg pins rule ≡ the explicit searchIvfPq payload
     // call; rule_fired pins that candidates came from the code store.
-    "v54_pq_hydrated_auto" -> ((s, d) => ruleLock.synchronized {
-      import s.implicits._
-      val dir = storeCache.computeIfAbsent(s"v47:$d", _ => {
-        val p   = java.nio.file.Files.createTempDirectory("graft-v47").toString + "/store"
-        val emb = Tables(s, d).embeddings.select(col("vec_id"), col("embedding"))
-        Pq.writeStore(emb, "embedding", "vec_id", p, nList = 8, m = 16, ksub = 64)
-        p
-      })
-      val (codes, floats, ivfm, pqm) = Pq.readStore(s, dir)
-      val meta = Tables(s, d).embeddings.select(col("vec_id").as("mid"), col("label").as("grade"))
-      val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val prev = classic.experimental.extraOptimizations
-      classic.experimental.extraOptimizations = prev :+ graft.plans.PqAutoProbe(s)
-      s.conf.set("spark.graft.pq.autoProbe", "true")
-      try {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-          df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        def hydForm() = Search.topK(floats.join(meta, col("vec_id") === col("mid")),
-          "embedding", "vec_id", qVec, 10, filters = Seq(col("grade") >= 5))
-          .select("vec_id", "score")
-        s.conf.set("spark.graft.pq.nProbe", "2")
-        s.conf.set("spark.graft.pq.refine", "4")
-        val pPlan = hydForm()
-        val fired = pPlan.queryExecution.optimizedPlan.toString.contains("pq_codes")
-        val pRule = rows(pPlan)
-        val pApi = rows(Pq.searchIvfPq(codes, floats, ivfm, pqm, "embedding", "vec_id",
-          qVec, 10, 2, 4, filters = Seq(col("grade") >= 5),
-          payload = meta, payloadIdCol = "mid").select("vec_id", "score"))
-        val pSame = pRule == pApi
-        s.conf.set("spark.graft.pq.nProbe", "8")
-        s.conf.set("spark.graft.pq.refine", "10000")
-        val exRule = rows(hydForm())
-        (exRule.map { case (id, sc) => ("exact", id, math.rint(sc * 1e4) / 1e4) } ++
-          Seq(("rule_eq_call", if (pSame) 1L else 0L, Double.NaN),
-            ("rule_fired", if (fired) 1L else 0L, Double.NaN)))
-          .toDF("path", "vec_id", "score")
-          .select(col("path"), col("vec_id"),
-            when(isnan(col("score")), lit(null).cast("double")).otherwise(col("score")).as("score"))
-          .orderBy(col("path"), desc("score"), col("vec_id"))
-      } finally {
-        s.conf.unset("spark.graft.pq.autoProbe")
-        s.conf.unset("spark.graft.pq.nProbe")
-        s.conf.unset("spark.graft.pq.refine")
-        classic.experimental.extraOptimizations = prev
-      }
+    "v54_pq_hydrated_auto" -> ((s, d) => {
+      val (codes, floats, ivfm, pqm) = Pq.readStore(s, pqStoreDir(s, d))
+      val meta  = Tables(s, d).embeddings.select(col("vec_id").as("mid"), col("label").as("grade"))
+      val grade = Seq(col("grade") >= 5)
+      def hydForm(rs: SparkSession) = Search.topK(GraftBridge.reRoot(rs, floats)
+        .join(GraftBridge.reRoot(rs, meta), col("vec_id") === col("mid")),
+        "embedding", "vec_id", qVec, 10, filters = grade).select("vec_id", "score")
+      val p     = pqRule(s, nProbe = 2, refine = 4)
+      val pPlan = hydForm(p)
+      val fired = pPlan.queryExecution.optimizedPlan.toString.contains("pq_codes")
+      val pSame = legRows(pPlan) == legRows(Pq.searchIvfPq(GraftBridge.reRoot(p, codes),
+        GraftBridge.reRoot(p, floats), ivfm, pqm, "embedding", "vec_id", qVec, 10, 2, 4,
+        filters = grade, payload = GraftBridge.reRoot(p, meta), payloadIdCol = "mid")
+        .select("vec_id", "score"))
+      val exRule = legRows(hydForm(pqRule(s, nProbe = 8, refine = 10000)))
+      parityFrame(s, TopKCols, exRule, "rule_eq_call" -> pSame, "rule_fired" -> fired)
     }),
 
     // V35 — IVF auto-maintenance (round 13): the drift twin of v34.

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorOps.asDouble
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 
 /** HNSW — a real hierarchical navigable-small-world graph index (Malkov &
   * Yashunin 2016), the same structure the reference's vector store uses
@@ -584,7 +584,7 @@ object Hnsw {
     * (`shard=...`), each row carrying its node's ord, id, level, normalized
     * vector and per-layer adjacency — columnar and splittable, so no
     * multi-GB blob cells at large shard sizes. Cached per `cacheKey` like
-    * [[Ivf.indexFor]].
+    * [[Ivf.indexFor]], and like it returned on `df`'s session.
     */
   def indexFor(
       df: DataFrame,
@@ -595,13 +595,13 @@ object Hnsw {
       m: Int = 16,
       efConstruction: Int = 128,
   ): DataFrame =
-    indexCache.computeIfAbsent(cacheKey, _ => {
+    GraftBridge.reRoot(df.sparkSession, indexCache.computeIfAbsent(cacheKey, _ => {
       val p = indexRoot(df) + "/" + java.lang.Long.toHexString(
         (scala.util.hashing.MurmurHash3.stringHash(cacheKey, 42).toLong << 32) |
           (scala.util.hashing.MurmurHash3.stringHash(cacheKey, 4242).toLong & 0xffffffffL))
       writeIndex(df, vecCol, idCol, p, nShards, m, efConstruction)
       readIndex(df.sparkSession, p)
-    })
+    }))
 
   /** Sidecar metadata a store needs for maintenance: the shard count pins
     * the id→shard routing (shard = `pmod(hash(id), nShards)`, the same

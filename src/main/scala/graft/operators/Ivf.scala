@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 
 /** IVF (inverted-file) approximate-nearest-neighbor index — the 100 TB scale
   * path for the reference's HNSW search (reference: backend/vector_db.py:41,
@@ -441,9 +441,13 @@ object Ivf {
     * [[writeIndexed]] and read back, so every subsequent probe is a
     * partition-pruned file scan — the layout that still works when the
     * corpus is 100 TB and could never `.persist()`.
+    *
+    * The handle comes back on `df`'s session, whichever session built it:
+    * a rule session ([[graft.Engine.ruleSession]]) only rewrites plans of
+    * its own frames.
     */
-  def indexFor(df: DataFrame, vecCol: String, nList: Int, cacheKey: String): (DataFrame, Model) =
-    indexCache.computeIfAbsent(cacheKey, _ => {
+  def indexFor(df: DataFrame, vecCol: String, nList: Int, cacheKey: String): (DataFrame, Model) = {
+    val (handle, model) = indexCache.computeIfAbsent(cacheKey, _ => {
       val (assigned, m) = assign(df, vecCol, nList)
       // 64-bit name from two murmur passes — a 32-bit hash makes silent
       // cross-key collisions plausible at registry scale.
@@ -453,6 +457,8 @@ object Ivf {
       writeIndexed(assigned, p, m, vecCol)
       (df.sparkSession.read.parquet(p), m)
     })
+    (GraftBridge.reRoot(df.sparkSession, handle), model)
+  }
 
   /** Compact a store fragmented by [[streamInto]] appends: every micro-batch
     * adds one file per touched list, and a long-lived stream leaves each

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.PqExpressions
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 
 /** Product quantization — the sub-int8 ANN memory tier (Jégou et al. 2011;
   * the faiss IVF-PQ composition the reference gets from Qdrant's quantizer
@@ -200,8 +200,8 @@ object Pq {
       m: Int,
       ksub: Int,
       cacheKey: String,
-  ): (DataFrame, DataFrame, Ivf.Model, Model) =
-    ivfPqCache.computeIfAbsent(cacheKey, _ => {
+  ): (DataFrame, DataFrame, Ivf.Model, Model) = {
+    val (codes, floats, ivfm, pqm) = ivfPqCache.computeIfAbsent(cacheKey, _ => {
       val pqm              = fit(df, vecCol, m, ksub)
       val (assigned, ivfm) = Ivf.assign(df, vecCol, nList)
       val coded            = pqTable(assigned, vecCol, pqm)
@@ -214,6 +214,9 @@ object Pq {
       val s = df.sparkSession
       (s.read.parquet(root + "/codes"), s.read.parquet(root + "/floats"), ivfm, pqm)
     })
+    // on df's session, like Ivf.indexFor's handle
+    (GraftBridge.reRoot(df.sparkSession, codes), GraftBridge.reRoot(df.sparkSession, floats), ivfm, pqm)
+  }
 
   // ---- persistent IVF-PQ store + incremental maintenance ----------------
 

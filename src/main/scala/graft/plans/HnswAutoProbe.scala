@@ -59,9 +59,12 @@ import org.apache.spark.sql.types.IntegerType
   * `spark.graft.hnsw.efSearch`, default 64; filtered-branch cap
   * `spark.graft.hnsw.maxEf`, default 4096; optional estimate-scan skip
   * `spark.graft.hnsw.selectivityHint`), so it is OPT-IN:
-  * `spark.graft.hnsw.autoProbe=true`. Registered via
-  * [[graft.GraftExtensions]] (spark-submit) or
-  * `spark.experimental.extraOptimizations` (live session).
+  * `spark.graft.hnsw.autoProbe=true`.
+  * Registration: the tested route is [[graft.Engine.ruleSession]], which
+  * appends the rule to a dedicated session's `extraOptimizations` (the
+  * optimizer's last batch). [[graft.GraftExtensions]] injects it into the
+  * operator-optimization batches instead — a different batch, and a
+  * route no test covers.
   */
 case class HnswAutoProbe(spark: SparkSession) extends Rule[LogicalPlan] {
 

@@ -37,9 +37,12 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   *
   * The rewrite trades exactness for recall exactly like [[Ivf.search]], so
   * it is OPT-IN: `spark.graft.ivf.autoProbe=true` (probe width
-  * `spark.graft.ivf.nProbe`, default 4). Registered via
-  * [[graft.GraftExtensions]] (spark-submit) or
-  * `spark.experimental.extraOptimizations` (live session).
+  * `spark.graft.ivf.nProbe`, default 4).
+  * Registration: the tested route is [[graft.Engine.ruleSession]], which
+  * appends the rule to a dedicated session's `extraOptimizations` (the
+  * optimizer's last batch). [[graft.GraftExtensions]] injects it into the
+  * operator-optimization batches instead — a different batch, and a
+  * route no test covers.
   *
   * Matching is conservative: a global Sort+Limit whose PRIMARY key is
   * descending cosine similarity against a literal query vector (directly

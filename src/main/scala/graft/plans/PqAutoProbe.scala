@@ -41,6 +41,11 @@ import org.apache.spark.sql.types.IntegerType
   * [[IvfAutoProbe]] are registered ([[graft.GraftExtensions]] injects
   * this one FIRST), the IVF rule declines PQ floats stores while this
   * rule is enabled, so the two never fight over the same scan.
+  * Registration: the tested route is [[graft.Engine.ruleSession]], which
+  * appends the rule to a dedicated session's `extraOptimizations` (the
+  * optimizer's last batch). [[graft.GraftExtensions]] injects it into the
+  * operator-optimization batches instead — a different batch, and a
+  * route no test covers.
   */
 object PqAutoProbe {
   /** Per-(session, store) cache of the reopened store — the 768-d tier

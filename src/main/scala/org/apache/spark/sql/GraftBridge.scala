@@ -51,11 +51,13 @@ object GraftBridge {
     * then governs execution while the shared SharedState keeps caches and
     * catalog visible. The plan must not embed session-specific state
     * beyond what SharedState carries — true for the scan/join/agg plans
-    * the lifecycle operators re-root.
+    * the lifecycle operators re-root. A frame already on `target` is
+    * returned as is.
     */
   def reRoot(target: SparkSession, df: Dataset[Row]): Dataset[Row] = {
     val t = target.asInstanceOf[classic.SparkSession]
     val d = df.asInstanceOf[classic.Dataset[Row]]
+    if (d.sparkSession eq t) return df
     require(t.sparkContext eq d.sparkSession.sparkContext,
       "reRoot requires sessions of the same SparkContext")
     classic.Dataset.ofRows(t, d.queryExecution.analyzed)
